@@ -78,21 +78,27 @@ object MailSyncPipeline {
 
   /** Member rows → audience rows: primary + partner expansion, email
     * validity (P10), dedup on normalized email, catalog-driven F8
-    * render. Keeps `role` for tag derivation. */
+    * render. Keeps `role` for tag derivation. Both rows of a member come
+    * from ONE scan of `members` (an exploded [primary, partner] pair,
+    * the partner slot null when there is none), so the assembly behind
+    * `members` runs once per job. */
   def memberAudienceRows(members: DataFrame,
       catalog: Seq[graft.sources.MergeField]): DataFrame = {
-    val primary = members.select(
+    val primary = struct(
       col("email"),
       concat_ws(" ", col("first_name"), col("last_name")).as("name"),
       col("birthday").as("bday"), col("join_date").as("joined"),
       coalesce(col("member_type"), lit("member")).as("role"),
       col("member_class").as("segment"))
-    val partner = members.filter(col("partner_email").isNotNull).select(
+    val partner = struct(
       col("partner_email").as("email"),
       concat_ws(" ", col("partner_first_name"), col("partner_last_name")).as("name"),
       col("partner_birthday").as("bday"), col("join_date").as("joined"),
       lit("partner").as("role"), col("member_class").as("segment"))
-    val valid = primary.unionByName(partner).filter(F.isValidEmail(col("email")))
+    val valid = members
+      .select(explode(array(primary, when(col("partner_email").isNotNull, partner))).as("r"))
+      .filter(col("r").isNotNull).select("r.*")
+      .filter(F.isValidEmail(col("email")))
     val deduped = Dedup.keepOneByKey(valid, Seq(lower(col("email"))),
       Seq(col("role"), col("name")))
     deduped.select(

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Merge}
+import graft.operators.Merge
 
 /** Batch conformance pipeline driver — the Spark shape of `sync-app run`
   * (reference `sync-app/src/sync.rs:464-638`, SURVEY §3.2):
@@ -17,6 +17,12 @@ import graft.operators.{Dedup, Merge}
   * (atomicity per SURVEY §7.4.4). Loads stay sequential on purpose: the
   * reference orders them for FK integrity (§7.4.6); the parallelism lives
   * inside each distributed write, not across them.
+  *
+  * Stats ride the write, as the reference's upsert/retain calls return
+  * their own counts (`sync-app/src/sync.rs:11-28`): each step attaches a
+  * `Dataset.observe` row count to the plan it materializes, so the source
+  * (or keep set) executes exactly once per step — never again for a
+  * trailing `count()`.
   */
 final class SyncPipeline(spark: SparkSession, storeDir: Option[String] = None,
     tableStore: Option[graft.sources.TableStore] = None) {
@@ -47,25 +53,45 @@ final class SyncPipeline(spark: SparkSession, storeDir: Option[String] = None,
     case None     => df.localCheckpoint(eager = true)
   }
 
-  /** Upsert `source` into table `name` on `keys`, recording stats. */
+  /** Upsert `source` into table `name` on `keys`, recording stats. The
+    * upserted count is observed on the source inside the written plan. */
   def load(name: String, source: DataFrame, keys: Seq[String]): Unit = {
     val t0 = System.nanoTime()
+    val seen = Observation()
+    val observed = source.observe(seen, count(lit(1)).as("rows"))
     val merged = store.get(name) match {
-      case Some(target) => Merge.upsert(target, source, keys)
-      case None         => source
+      case Some(target) => Merge.upsert(target, observed, keys)
+      case None         => observed
     }
     store(name) = materialize(name, merged)
-    stats(name) = SyncStats(upserted = source.count(), deleted = 0,
+    // AQE replaces a full-outer side it found empty by nulls, and that
+    // side's metrics go with it: a missing count is zero rows
+    val upserted = seen.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+    stats(name) = SyncStats(upserted = upserted, deleted = 0,
       duration = (System.nanoTime() - t0) / 1e9)
   }
 
   /** Retain-GC table `name` to the keep-set, recording deleted count
-    * (reference `retain_*`, leaf-first ordering is the caller's duty). */
+    * (reference `retain_*`, leaf-first ordering is the caller's duty).
+    *
+    * One pass: a left-outer equi-join against the DISTINCT keep keys
+    * tags each target row, exactly once, with whether its key is kept (a
+    * NULL key matches nothing, as in `Merge.retainDeletes`); target and
+    * kept rows are both counted at the top of the written plan, and the
+    * untagged rows are dropped — leaving what `Merge.retain` keeps.
+    * Counting above the join, not on the target under a semi join, keeps
+    * the counts when AQE prunes a join side it found empty. */
   def gc(name: String, keep: DataFrame, keys: Seq[String]): Unit = {
     val t0 = System.nanoTime()
-    val target = store(name)
-    val deleted = Merge.retainDeletes(target, keep, keys).count()
-    store(name) = materialize(name, Merge.retain(target, keep, keys))
+    val kept = "__kept"
+    val seen = Observation()
+    val keepKeys = keep.select(keys.map(col): _*).distinct().withColumn(kept, lit(true))
+    val retained = store(name).join(keepKeys, keys, "left_outer")
+      .observe(seen, count(lit(1)).as("rows"), count(col(kept)).as("kept"))
+      .filter(col(kept).isNotNull).drop(kept)
+    store(name) = materialize(name, retained)
+    val m = seen.get
+    val deleted = m("rows").asInstanceOf[Long] - m("kept").asInstanceOf[Long]
     val prev = stats.getOrElse(name, SyncStats(0, 0, 0))
     stats(name) = prev.copy(deleted = prev.deleted + deleted,
       duration = prev.duration + (System.nanoTime() - t0) / 1e9)

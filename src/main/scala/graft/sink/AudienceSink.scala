@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions._
   *    never touching `cleaned` members (`mailchimp/src/members.rs:68-97`).
   *    The keep set is a DataFrame and the doomed set is a distributed
   *    anti-join (Merge.retainDeletes); deletes are pushed from executors
-  *    in batches. Nothing member-shaped ever lands on the driver — at a
-  *    10⁸-member audience the driver only sees counts.
+  *    in batches, and the deleted count rides that same pass — like the
+  *    reference's retain, which returns its own stats, nothing is
+  *    persisted or re-run to count. Nothing member-shaped ever lands on
+  *    the driver — at a 10⁸-member audience the driver only sees counts.
   *  - S13 `updateTags`: per-member tag-state updates applied from
   *    executors in chunks of 1000 (`mailchimp/src/members.rs:249-274`),
   *    same partition-parallel shape as S11.
@@ -146,7 +148,11 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
 
   /** S12: delete members not in `keep` (a DataFrame of ids), excluding
     * cleaned — the doomed set is a distributed anti-join and the deletes
-    * are executor-side batches. Returns the deleted count. */
+    * are executor-side batches. Returns the deleted count, counted in the
+    * same single pass that posts the deletes (see upsertMany): the doomed
+    * set anti-joins `membersDf`'s driver-side snapshot, so the deletes
+    * this pass makes cannot change it and a retried task sees the same
+    * ids. */
   def retain(spark: SparkSession, keep: DataFrame): Long = {
     val (sid, bs, retries) = (sinkId, batchSize, maxRetries)
     val keepIds =
@@ -159,14 +165,16 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
     val doomed = graft.operators.Merge.retainDeletes(
         membersDf(spark), keepIds, Seq("id"),
         exempt = Some(col("status") === "cleaned"))
-      .select("id").persist()
-    val n = doomed.count() // D6 stats; also materializes before mutation
+      .select("id")
+    val deleted = spark.sparkContext.longAccumulator("audience_deleted")
     doomed.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
       it.map(_.getString(0)).grouped(bs)
-        .foreach(ids => withRetry(retries)(deleteBatch(sid, ids)))
+        .foreach { ids =>
+          withRetry(retries)(deleteBatch(sid, ids))
+          deleted.add(ids.size)
+        }
     }
-    doomed.unpersist()
-    n
+    deleted.value
   }
 
   /** S13: (id, tag, active) updates applied from executors in chunks of

@@ -19,7 +19,12 @@ trait TableSource extends Serializable {
 trait TableStore extends TableSource {
   /** Atomically replace table `name` with `df`: the new state becomes
     * visible only after the write action succeeds (write-then-swap), and
-    * the returned DataFrame reads the committed state. */
+    * the returned DataFrame reads the committed state.
+    *
+    * Contract: `df` executes exactly once, before this returns. Callers
+    * rely on it — `SyncPipeline` reads its stats from observations on
+    * `df` (`Observation.get` blocks until the plan has run), and a second
+    * execution would also re-run the source extract. */
   def writeSwap(spark: SparkSession, name: String, df: DataFrame): DataFrame
 }
 
@@ -79,7 +84,9 @@ final case class ParquetStore(dir: String) extends TableStore {
     // resolve monotonically (highest completed version wins)
     versions.merge(name, Integer.valueOf(v),
       (a, b) => if (a.intValue() >= b.intValue()) a else b)
-    spark.read.parquet(path)
+    // read back with the schema just written: no schema-inference job
+    // (file sources read every column as nullable either way)
+    spark.read.schema(df.schema).parquet(path)
   }
 }
 

@@ -319,8 +319,8 @@ object WarcSource {
     * the session's cross-query caches, so every NEW driver invocation
     * still writes from the parquet inputs — nothing persists across
     * runs. */
-  private val writtenHtmlDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, String)]()
+  private val writtenHtmlDirs = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[(String, Int, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]()
   graft.CacheScope.onSessionRelease(() => writtenHtmlDirs.clear())
   def ensureHtmlResponses(docs: DataFrame, dir: String, nFiles: Int): Unit = {
     // Memo key = (dir, nFiles, docs-plan fingerprint) — r19, per the
@@ -328,8 +328,11 @@ object WarcSource {
     // and layout silently win for the whole session; all call sites
     // pass byte-identical docs today, and this key fails safe (a
     // different projection or file count re-writes) instead of
-    // trusting that invariant unchecked.
-    val key = (dir, nFiles, docs.queryExecution.logical.canonicalized.toString)
+    // trusting that invariant unchecked. The plan is the canonicalized
+    // tree itself — structural equality, `semanticHash` as its hash —
+    // not its `toString`, which `spark.sql.debug.maxToStringFields`
+    // truncates (two projections differing past the cut would collide).
+    val key = (dir, nFiles, docs.queryExecution.analyzed.canonicalized)
     if (!writtenHtmlDirs.contains(key)) writtenHtmlDirs.synchronized {
       if (!writtenHtmlDirs.contains(key)) {
         writeHtmlResponses(docs, dir, nFiles)

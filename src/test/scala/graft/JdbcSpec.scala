@@ -22,9 +22,11 @@ class JdbcSpec extends AnyFunSuite {
       reads += options
       served.getOrElse(options("dbtable"), Seq((1L, "x")).toDF("id", "v"))
     }
+    /** Runs the plan once, as a database write does, and serves what it
+      * wrote (the TableStore.writeSwap contract). */
     override def write(df: DataFrame, options: Map[String, String]): Unit = {
       writes += options
-      served += options("dbtable") -> df
+      served += options("dbtable") -> df.localCheckpoint(eager = true)
     }
     private val Rename = """ALTER TABLE "(.+)" RENAME TO "(.+)"""".r
     private val MyRename = """RENAME TABLE `(.+)` TO `(.+)`, `(.+)` TO `(.+)`""".r
@@ -171,5 +173,9 @@ class JdbcSpec extends AnyFunSuite {
     assert(v2.count() == 2 && store.table(spark, "t").count() == 2)
     // previous version still readable (failed-write safety)
     assert(spark.read.parquet(s"$dir/t/v1").count() == 1)
+    // the read-back takes the written schema instead of inferring one,
+    // and still reads as inference would: every column nullable
+    assert(!Seq((1L, "a")).toDF("id", "v").schema("id").nullable)
+    assert(v2.schema == spark.read.parquet(s"$dir/t/v2").schema)
   }
 }

@@ -80,4 +80,33 @@ class MultiJobSyncSpec extends AnyFunSuite {
     // partner expansion: partner audience rows exist with their own id
     assert(allRows.filter(col("role") === "partner").count() > 0)
   }
+
+  test("memberAudienceRows builds primary and partner rows from ONE scan of members") {
+    import org.apache.spark.sql.functions._
+    val evals = spark.sparkContext.longAccumulator("member_rows")
+    val probe = udf { (_: String) => evals.add(1); true }.asNondeterministic()
+    val all = graft.queries.Members.all(spark, dir)
+    val n = all.count()
+    val partners = all.filter(col("partner_email").isNotNull).count()
+    assert(partners > 0, "fixture must carry partner members")
+    val rows = graft.pipeline.MailSyncPipeline.memberAudienceRows(
+      all.filter(probe(col("uid").cast("string"))), graft.sources.MergeFieldCatalog.all)
+    evals.reset()
+    val out = rows.select("role").collect()
+    assert(evals.value == n, s"members scanned ${evals.value.toDouble / n} times")
+    assert(out.count(_.getString(0) == "partner") > 0 && out.length > n / 2)
+  }
+
+  test("job budget: MultiJobSync.runJob (see PipelineSpec's sync-app budget)") {
+    val job = SyncJob(1, "all-members", "budget-all")
+    // the first sync (not counted) fills the audience, so the counted
+    // run upserts, retains and tags as a steady-state sync does
+    MultiJobSync.runJob(spark, dir, job)
+    val jobs = new JobCounter(spark)
+    try {
+      val n = jobs(MultiJobSync.runJob(spark, dir, job))
+      info(s"runJob=$n jobs")
+      assert(n <= 29, s"sync-mail job over budget: $n jobs")
+    } finally jobs.close()
+  }
 }

@@ -125,6 +125,77 @@ class PipelineSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq == Seq((2L, "b")))
   }
 
+  /** A source of `n` rows whose every evaluation of a row adds one to
+    * `evals` (nondeterministic, so the optimizer neither drops nor
+    * duplicates the probe). */
+  private def countedRange(n: Long, evals: org.apache.spark.util.LongAccumulator) = {
+    val probe = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+    spark.range(n).toDF().filter(probe(col("id")))
+  }
+
+  test("SyncPipeline load runs its source once and gc its keep set once") {
+    val evals = spark.sparkContext.longAccumulator("sync_source_rows")
+    val stores = Seq(None,
+      Some(java.nio.file.Files.createTempDirectory("sync_once").toString))
+    for (storeDir <- stores) {
+      val p = new SyncPipeline(spark, storeDir)
+      p.load("t", spark.range(150).select(col("id"), lit("old").as("v")), Seq("id"))
+      evals.reset()
+      p.load("t", countedRange(100, evals).select(col("id"), lit("new").as("v")), Seq("id"))
+      assert(evals.value == 100, s"load ran its source ${evals.value / 100.0} times ($storeDir)")
+      assert(p.statsMap("t").upserted == 100)
+      evals.reset()
+      p.gc("t", countedRange(60, evals), Seq("id"))
+      assert(evals.value == 60, s"gc ran its keep set ${evals.value / 60.0} times ($storeDir)")
+      assert(p.statsMap("t").deleted == 90 && p.table("t").count() == 60)
+    }
+  }
+
+  test("gc's deleted count equals Merge.retainDeletes with NULL, duplicate and empty keys") {
+    import graft.operators.Merge
+    val target = Seq((Some(1L), "a"), (Some(1L), "a2"), (Some(2L), "b"),
+      (None, "n"), (None, "n2"), (Some(3L), "c")).toDF("id", "v")
+    val keep = Seq(Some(1L), None, Some(3L)).toDF("id")
+    val p = new SyncPipeline(spark)
+    p.init("t", target)
+    p.gc("t", keep, Seq("id"))
+    val expected = Merge.retainDeletes(target, keep, Seq("id")).count()
+    assert(expected == 3 && p.statsMap("t").deleted == expected)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Option[Long], String)].collect().toSeq.sortBy(_._2)
+    assert(rows(p.table("t")) == rows(Merge.retain(target, keep, Seq("id"))))
+    // sides that are empty only at run time, which AQE prunes from the
+    // join: a load of nothing upserts nothing and keeps every row…
+    p.load("t", spark.range(10).filter(col("id") < 0)
+      .select(col("id"), lit("x").as("v")), Seq("id"))
+    assert(p.statsMap("t").upserted == 0 && p.table("t").count() == 3)
+    // …and a gc to nothing deletes every row
+    p.gc("t", spark.range(10).toDF().filter(col("id") < 0), Seq("id"))
+    assert(p.statsMap("t").deleted == 3 && p.table("t").count() == 0)
+  }
+
+  // Job budgets of the sync path: a steady-state step runs its source
+  // once, so a change that runs one again — a trailing count(), a second
+  // scan of the member assembly, a persist filled only to be counted —
+  // fails here. The bounds are the counts single execution reaches; they
+  // are a floor to defend, not a setting to raise.
+  test("job budget: SyncPipeline load + gc of the member assembly") {
+    import graft.queries.Members
+    val store = java.nio.file.Files.createTempDirectory("budget_store").toString
+    val p = new SyncPipeline(spark, Some(store))
+    // the initial load (not counted) fills the store, so the counted
+    // load takes the upsert path a steady-state sync takes
+    p.load("members", Members.all(spark, sf), Seq("uid"))
+    val jobs = new JobCounter(spark)
+    try {
+      val members = Members.all(spark, sf)
+      val load = jobs(p.load("members", members, Seq("uid")))
+      val gc = jobs(p.gc("members", members, Seq("uid")))
+      info(s"load=$load gc=$gc jobs")
+      assert(load <= 24 && gc <= 23, s"sync-app step over budget: load=$load gc=$gc jobs")
+    } finally jobs.close()
+  }
+
   test("SyncPipeline releases operator-internal caches (CacheScope driver contract)") {
     import graft.operators.NearDup
     val sc = spark.sparkContext

@@ -1024,35 +1024,11 @@ class ScaleSpec extends AnyFunSuite {
   test("bloom filter build is one job with expectedItems, two without") {
     import graft.plans.BloomJoin
     import graft.sources.Tables
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val urgent = Tables.orders(spark, sf)
       .filter(col("o_orderpriority") === "1-URGENT").persist()
     urgent.count() // materialize so job counts below are only the builds
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val countJobs = new JobCounter(spark)
     try {
-      // the listener bus is async: poll until the count survives two
-      // consecutive 200ms windows unchanged (one delivery-gap window
-      // alone undercounts), bounded at 10s so a never-idle bus fails
-      // the test instead of hanging it
-      def drain(): Int = {
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        var stable = 0
-        var prev = jobs.get()
-        while (stable < 2 && System.nanoTime() < deadline) {
-          Thread.sleep(200)
-          val cur = jobs.get()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-        assert(stable >= 2, "listener bus never quiesced within 10s")
-        prev
-      }
-      def countJobs(body: => Unit): Int = {
-        drain(); jobs.set(0); body; drain()
-      }
       val sized = countJobs(BloomJoin.buildFilter(urgent, col("o_orderkey"), 0.01,
         expectedItems = Some(2000L)))
       val unsized = countJobs(BloomJoin.buildFilter(urgent, col("o_orderkey"), 0.01))
@@ -1071,7 +1047,7 @@ class ScaleSpec extends AnyFunSuite {
         .count(bf.mightContainLong)
       assert(falsePos < 600, s"auto-sized filter fpp way above 1%: $falsePos/20000")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      countJobs.close()
       urgent.unpersist()
     }
   }

@@ -89,6 +89,20 @@ class SinkSourceSpec extends AnyFunSuite {
     assert(upserted == 100 && sink.size == 100)
   }
 
+  test("audience sink: retain counts its deletes in the pass that posts them, through retries") {
+    val sink = new AudienceSink(sinkId = "t_retain_retry", batchSize = 10, sinkPartitions = 2)
+    sink.upsertMany((0 until 60).map(i =>
+      (f"k$i%02d", s"k$i@x.org", if (i % 10 == 5) "cleaned" else "subscribed", "{}"))
+      .toDF("id", "email", "status", "merge_json"))
+    val kept = (0 until 20).map(i => f"k$i%02d")
+    sink.injectTransientFailures(2)
+    val n = sink.retain(spark, kept.toDF("id"))
+    val cleanedSpared = (20 until 60).filter(_ % 10 == 5).map(i => f"k$i%02d")
+    assert(n == 40 - cleanedSpared.size)
+    assert(sink.allIds == (kept ++ cleanedSpared).toSet)
+    assert(sink.retain(spark, kept.toDF("id")) == 0)
+  }
+
   test("audience sink retain semantics mirror cleaned-exclusion") {
     val sink = new AudienceSink(sinkId = "t3")
     sink.upsertMany(Seq(

@@ -271,6 +271,33 @@ class WarcSourceSpec extends AnyFunSuite {
       concat(lit("text body of doc "), col("id"), lit(" with words")).as("text"))
   }
 
+  test("ensureHtmlResponses keys on the plan, not its truncated toString") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("warc_memo").toString
+    def warcs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".warc"))
+    def written(docs: org.apache.spark.sql.DataFrame): Boolean = {
+      warcs.foreach(_.delete())
+      WarcSource.ensureHtmlResponses(docs, dir, 2)
+      warcs.nonEmpty
+    }
+    // 30 extra columns: the projections differ only in the last, past
+    // the spark.sql.debug.maxToStringFields cut of the plan string
+    def wide(last: Int) = docsDf(11).select(col("*") +:
+      (1 to 30).map(i => lit(if (i == 30) last else 0).as(s"c$i")): _*)
+    def planString(k: Int) = wide(k).queryExecution.analyzed.canonicalized.toString
+    assert(planString(1) == planString(2), "the two plans must print alike")
+    assert(written(wide(1)))
+    assert(written(wide(2)), "a projection differing past the cut must be written")
+    // a separately built but identical projection is still a memo hit,
+    // over a parquet scan as the catalog's callers read it
+    val parquet = java.nio.file.Files.createTempDirectory("warc_memo_docs").toString + "/d"
+    docsDf(11).write.parquet(parquet)
+    assert(written(spark.read.parquet(parquet).select("doc_id", "uri", "lang", "text")))
+    assert(!written(spark.read.parquet(parquet).select("doc_id", "uri", "lang", "text")),
+      "an identical projection must reuse the written fixture")
+  }
+
   test("readWetGz over the gzip twin equals readWet over the plain fixture") {
     val plain = "/tmp/graft_warcspec_plain"
     val gz = "/tmp/graft_warcspec_gz"
